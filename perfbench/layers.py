@@ -156,3 +156,17 @@ def self_times(spans):
     for s in spans:
         out[s["layer"]] = out.get(s["layer"], 0.0) + t.self_ms(s)
     return out
+
+
+def by_op(spans, cpus):
+    """The per-layer metrics of each operation name, over all its sweeps or
+    passes: the op spans of that name and every span below them. On
+    `queries` this separates the kernel from the relational queries."""
+    t = Tree(spans)
+    out = {}
+    for name in sorted({s["name"] for s in spans if s["layer"] == "op"}):
+        roots = {s["id"] for s in spans if s["layer"] == "op" and s["name"] == name}
+        keep = [s for s in spans if s["id"] in roots
+                or any(a["id"] in roots for a in t.ancestors(s))]
+        out[name] = layer_metrics(keep, {}, cpus)
+    return out

@@ -1,5 +1,5 @@
-"""Record the expected output digests of the read-only workloads from the
-current program: runs each workload once against an empty digest file and
+"""Record the expected output digests of the read-only workload from the
+current program: runs `queries` once against an empty digest file and
 stores the digest every query produced.
 
     python3 perfbench/record_digests.py
@@ -32,21 +32,20 @@ def main():
                                      delete=False) as f:
         f.write("{}")
     try:
-        for w in ("olap", "kernels"):
-            env = dict(os.environ, PERFBENCH_DIGESTS=f.name)
-            subprocess.run([sys.executable, str(BENCH / "run.py"), "--workload", w,
-                            "--seed", "0", "--seconds", "1", "--trace", "0"],
-                           cwd=ROOT, env=env, stdout=subprocess.DEVNULL,
-                           stderr=subprocess.DEVNULL, check=True)
-            rec = json.loads((build.build_dir() / "results" /
-                              f"{w}-seed0-trace0.json").read_text())
-            for line in rec["failures"]:
-                m = GOT.match(line)
-                if not m:
-                    raise SystemExit(f"unexpected failure: {line}")
-                q, got = m.group(1), m.group(3)
-                if digests.setdefault(q, got) != got:
-                    raise SystemExit(f"{q} gave two digests: {digests[q]}, {got}")
+        env = dict(os.environ, PERFBENCH_DIGESTS=f.name)
+        subprocess.run([sys.executable, str(BENCH / "run.py"), "--workload", "queries",
+                        "--seed", "0", "--seconds", "1", "--trace", "0"],
+                       cwd=ROOT, env=env, stdout=subprocess.DEVNULL,
+                       stderr=subprocess.DEVNULL, check=True)
+        rec = json.loads((build.build_dir() / "results" /
+                          "queries-seed0-trace0.json").read_text())
+        for line in rec["failures"]:
+            m = GOT.match(line)
+            if not m:
+                raise SystemExit(f"unexpected failure: {line}")
+            q, got = m.group(1), m.group(3)
+            if digests.setdefault(q, got) != got:
+                raise SystemExit(f"{q} gave two digests: {digests[q]}, {got}")
     finally:
         os.unlink(f.name)
     (BENCH / "expected_digests.json").write_text(

@@ -1,6 +1,6 @@
 """Run one workload of the benchmark and print its metrics.
 
-    python3 perfbench/run.py --workload olap|kernels|etl --seed N \
+    python3 perfbench/run.py --workload queries|etl --seed N \
         --seconds S --trace 0|1
 
 Run from the root of a checkout. The first run compiles the program and the
@@ -27,7 +27,7 @@ import build  # noqa: E402
 import layers  # noqa: E402
 from stats import geomean, median  # noqa: E402
 
-WORKLOADS = ("olap", "kernels", "etl")
+WORKLOADS = ("queries", "etl")
 JVM_TIMEOUT_S = 170
 
 
@@ -37,21 +37,20 @@ def spec():
 
 def end_to_end(rec):
     """End-to-end metrics of one run record. A "query" is one timed
-    operation: a declared query on olap/kernels, one pipeline call or
-    read-back on etl."""
+    operation: a declared query on the queries workload, one pipeline call
+    or read-back on etl. `run_s` is one sweep (queries) or pass (etl),
+    taken as the sum over its operations of each operation's median over
+    the sweeps or passes, so a slow stretch in one of them does not count
+    in full."""
     ops = [o for o in rec["ops"] if o["ok"]]
     samples = [o["s"] for o in ops]
     per_op = {}
     for o in ops:
         per_op.setdefault(o["op"], []).append(o["s"])
     setup = rec["setup"]
-    if rec["sweeps_s"]:
-        run_s = median(rec["sweeps_s"])
-    else:
-        run_s = sum(samples)
     return {
         "setup_s": setup["jvm_s"] + median(setup["session_s"]) + setup["inputs_s"],
-        "run_s": run_s,
+        "run_s": sum(median(v) for v in per_op.values()),
         "query_geomean_s": geomean([median(v) for v in per_op.values()]),
         "query_p50_s": median(samples),
     }
@@ -155,6 +154,7 @@ def main():
     rec["build"] = (out / "build.stamp").read_text()
     if args.trace:
         rec["self_ms_by_layer"] = layers.self_times(rec["spans"])
+        rec["layers_by_op"] = layers.by_op(rec["spans"], rec["cpus"])
     (results / name).write_text(json.dumps(rec))
 
     units = {m["name"]: m["unit"] for m in s["end_to_end"] + s["per_layer"]}

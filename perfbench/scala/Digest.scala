@@ -31,6 +31,22 @@ object Digest {
     agg(xxhash64(fields.map(f => col(s"`${f.name}`")): _*), u)
   }
 
+  /** [[exact]] of each group of rows sharing a value of the integral
+    * column `key`, all in one aggregation; `key` is left out of the hash. A
+    * group with no rows is absent from the result. */
+  def exactBy(df: DataFrame, key: String): Map[Long, String] = {
+    val data = df.columns.filter(_ != key)
+    require(data.distinct.length == data.length, s"duplicate column names: ${data.mkString(",")}")
+    // exact's column order: by name, with the column's position appended
+    val order = data.zipWithIndex.map { case (c, i) => (s"${c}__$i", c) }.sortBy(_._1)
+    df.groupBy(col(key).cast("long"))
+      .agg(count(lit(1)), sum(xxhash64(order.map { case (_, c) => col(s"`$c`") }: _*)
+        .cast(DecimalType(38, 0))))
+      .collect().map { r =>
+        r.getLong(0) -> s"${r.getLong(1)}:${Option(r.getDecimal(2)).map(_.toPlainString).getOrElse("0")}"
+      }.toMap
+  }
+
   /** Run a query to completion and digest its rows on the way out: the
     * query's physical plan runs exactly as under the `noop` sink (every row
     * of the final, ordered result is produced; nothing is added on top of

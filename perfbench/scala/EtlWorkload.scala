@@ -17,17 +17,19 @@ import graft.sources.ParquetSource
 
 /** The write workload: a seeded table derived from the fixture's
   * `lineitem` goes through the reference library's pipelines in order:
-  * tar/CSV ingest, seed, update rounds, then streaming micro-batches that
+  * tar/CSV ingest, seed, an update round, then streaming micro-batches that
   * stack deltas on the same destination. Every commit is followed by a
   * timed read-back aggregate over `Snapshot.read`, whose digest is checked
-  * (untimed) against an independently computed expectation.
+  * (untimed) against an independently computed expectation. The whole
+  * pipeline is one pass; a run makes several passes over the same inputs,
+  * each into fresh destinations, so every operation has several samples.
   */
 object EtlWorkload {
-  val Rounds = 2          // updatePipeline rounds
+  val Rounds = 1          // updatePipeline rounds per pass
   val Batches = 8         // micro-batches; the eighth compacts the stack
-  val CsvMembers = 2      // tar members, one table each
-  val TableShare = 6      // one lineitem row in this many joins the table
-  val CsvShare = 40       // one table row in this many per member joins the export
+  val CsvMembers = 1      // tar members, one table each
+  val TableShare = 24     // one lineitem row in this many joins the table
+  val CsvShare = 5        // one table row in this many per member joins the export
   val Pk = "id"
   val DeltaCol = "updated_at"
   /** Fixed clock of the generated change history (2024-01-01T00:00:00Z). */
@@ -37,6 +39,12 @@ object EtlWorkload {
   val BaseIds = 1000000000L
 
   def asOf(round: Int): Long = T0 + 3600L * round
+
+  /** `--seconds` per pass: 30 s give three passes. The count depends only on
+    * the arguments, so every run does the same work. */
+  val PassSeconds = 10.0
+
+  def passes(seconds: Double): Int = math.max(1, math.round(seconds / PassSeconds).toInt)
 
   final case class Inputs(dir: String, rows: Long, csvRows: Long,
                           csvIdSum: Long, tarPath: String, tarBytes: Long,
@@ -54,8 +62,10 @@ object EtlWorkload {
   def generate(spark: SparkSession, dataDir: String, dir: String, seed: Long): Inputs = {
     val s = lit(seed)
     val base = spark.read.parquet(s"$dataDir/lineitem.parquet")
-      .withColumn(Pk, row_number().over(
-        Window.orderBy(monotonically_increasing_id())).cast("long"))
+      // a unique key without a global sort: the row's input partition and
+      // its place in it (the fixture and the core count fix both)
+      .withColumn(Pk, spark_partition_id().cast("long") * 10000000L + 1L +
+        (monotonically_increasing_id() - shiftleft(spark_partition_id().cast("long"), 33)))
       .filter(pmod(xxhash64(col(Pk), s), lit(TableShare.toLong)) === 0)
       .select(col(Pk), col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
         col("l_quantity"), col("l_extendedprice"), col("l_discount"),
@@ -135,15 +145,25 @@ object EtlWorkload {
       new File(tarPath).length(), changed)
   }
 
-  /** latest-wins fold of one micro-batch onto the expected table, with plain
-    * DataFrame operations (independent of the sink and of Snapshot). */
-  def fold(state: DataFrame, batch: DataFrame): DataFrame = {
-    val latest = batch
+  /** The expected table after each micro-batch, with plain DataFrame
+    * operations (independent of the sink and of Snapshot). `batches`
+    * carries a `batch` column numbered 1..n and `base` is batch 0; a key's
+    * newest row of batch b replaces the key's row from batch b on (latest
+    * wins). Returns the rows of every state 1..n, each tagged with its
+    * state's number in column `batch`. */
+  def states(base: DataFrame, batches: DataFrame, n: Int): DataFrame = {
+    val newest = batches
       .withColumn("__rn", row_number().over(
-        Window.partitionBy(col(Pk)).orderBy(col(DeltaCol).desc)))
+        Window.partitionBy(col(Pk), col("batch")).orderBy(col(DeltaCol).desc)))
       .filter(col("__rn") === 1).drop("__rn")
-    state.join(latest.select(Pk), Seq(Pk), "left_anti")
-      .unionByName(latest)
+    val until = coalesce(lead(col("batch"), 1).over(
+      Window.partitionBy(col(Pk)).orderBy(col("batch"))), lit(n + 1))
+    base.withColumn("batch", lit(0)).unionByName(newest)
+      .withColumn("__until", until)
+      .withColumn("__from", greatest(col("batch"), lit(1)))
+      .filter(col("__until") > col("__from"))
+      .withColumn("batch", explode(sequence(col("__from"), col("__until") - 1)))
+      .drop("__from", "__until")
   }
 
   /** The check made after every commit: the read-back digest must equal
@@ -173,12 +193,41 @@ object EtlWorkload {
         Files.getLastModifiedTime(p).toMillis >= sinceMs
     }
 
-  def run(spark: SparkSession, rec: Recorder, in: Inputs, workDir: String): Unit = {
+  /** Expected digest of every commit of a pass, keyed by the commit's
+    * label, derived from the generated inputs with plain DataFrame
+    * operations (independent of the pipelines, the sink and Snapshot).
+    * Every pass starts from nothing and gets the same inputs, so one set
+    * serves them all. */
+  def expectations(spark: SparkSession, in: Inputs): Map[String, String] = {
+    val rounds = (0 to Rounds).map { k =>
+      (if (k == 0) "seed" else s"update/$k") -> Digest.exact(spark.read.parquet(in.source(k)))
+    }
+    val batches = Digest.exactBy(states(spark.read.parquet(in.source(Rounds)),
+      spark.read.parquet(in.batches), Batches), "batch")
+    (rounds ++ (1 to Batches).map(m => s"delta/$m" -> batches.getOrElse(m, "0:0"))).toMap
+  }
+
+  /** The timed passes, each into fresh destinations under `workDir`. */
+  def run(spark: SparkSession, rec: Recorder, in: Inputs,
+          expected: Map[String, String], workDir: String, passes: Int): Unit = {
+    (1 to passes).foreach { p =>
+      pass(spark, rec, in, expected, s"$workDir/pass$p", p)
+      QueryWorkload.settle()
+    }
+    if (rec.trace.enabled) spaceStats(spark, rec.trace, in, s"$workDir/pass$passes", passes)
+  }
+
+  private def pass(spark: SparkSession, rec: Recorder, in: Inputs,
+                   expected: Map[String, String], dir: String, p: Int): Unit = {
     val trace = rec.trace
     val sc = spark.sparkContext
-    val dest = s"$workDir/warehouse/lineitem_snap"
-    val ingestRoot = s"$workDir/warehouse/ingest"
+    val dest = s"$dir/lineitem_snap"
+    val ingestRoot = s"$dir/ingest"
     def group(op: String): Unit = sc.setJobGroup(s"etl/$op", s"etl/$op")
+    def op[T](name: String, kind: String, attrs: (String, Any)*)(body: => T): Option[T] =
+      rec.op(name, kind, ("pass" -> p) +: attrs: _*)(body)
+    def expect(label: String, got: Option[String]): Unit =
+      expectDigest(rec, s"$label/$p", got, expected(label))
 
     def commitStats(roots: Seq[String], sinceMs: Long): Unit = if (trace.enabled) {
       trace.add("etl.write_files", roots.map(newDataFiles(_, sinceMs)).sum.toDouble)
@@ -189,23 +238,23 @@ object EtlWorkload {
     /** Timed read-back aggregate; returns the digest for the check. */
     def readBack(root: String, label: String): Option[String] = {
       group(s"read/$label")
-      rec.op(s"read/$label", "read") {
+      op(s"read/$label", "read") {
         trace.span(label, "etl.read") { Digest.exact(Snapshot.read(spark, root)) }
       }
     }
 
     // (1) tar.gz export -> one committed table per member
     group("ingest")
-    val targets = (0 until CsvMembers).map(j => s"cb_part$j")
+    val targets = ingestTargets
     val t1 = System.currentTimeMillis()
-    rec.op("ingest", "ingest", "rows" -> in.csvRows, "bytes" -> in.tarBytes) {
+    op("ingest", "ingest", "rows" -> in.csvRows, "bytes" -> in.tarBytes) {
       trace.span("flatfilePipelineFromTar", "sources.ingest") {
         Pipelines.flatfilePipelineFromTar(spark, in.tarPath, targets, ingestRoot)
       }
     }
     commitStats(targets.map(t => s"$ingestRoot/$t"), t1)
     val ingested = targets.map { t =>
-      val got = rec.op(s"read/$t", "read") {
+      val got = op(s"read/$t", "read") {
         trace.span(t, "etl.read") {
           Snapshot.read(spark, s"$ingestRoot/$t")
             .agg(count(lit(1)), sum(col(Pk))).collect()(0)
@@ -213,7 +262,7 @@ object EtlWorkload {
       }
       got.map(r => (r.getLong(0), r.getLong(1)))
     }
-    rec.check("ingest") {
+    rec.check(s"ingest/$p") {
       val n = ingested.flatten.map(_._1).sum
       val ids = ingested.flatten.map(_._2).sum
       if (ingested.exists(_.isEmpty)) Some("read-back failed")
@@ -222,92 +271,89 @@ object EtlWorkload {
       else None
     }
 
-    def expect(label: String, got: Option[String], want: => String): Unit =
-      expectDigest(rec, label, got, want)
-
     // (2) seed
     group("seed")
     val t2 = System.currentTimeMillis()
-    rec.op("seed", "seed", "rows" -> in.rows) {
+    op("seed", "seed", "rows" -> in.rows) {
       trace.span("seedPipeline", "etl.seed") {
         Pipelines.seedPipeline(spark, ParquetSource(in.source(0)), dest)
       }
     }
     commitStats(Seq(dest), t2)
-    expect("seed", readBack(dest, "seed"),
-      Digest.exact(spark.read.parquet(in.source(0))))
+    expect("seed", readBack(dest, "seed"))
 
     // (3) update rounds, every change inside the one-hour window
     (1 to Rounds).foreach { k =>
       group(s"update/$k")
       val t = System.currentTimeMillis()
-      rec.op(s"update/$k", "update") {
+      op(s"update/$k", "update") {
         trace.span("updatePipeline", "etl.update") {
           Pipelines.updatePipeline(spark, ParquetSource(in.source(k)), dest,
             Pk, DeltaCol, timestamp_seconds(lit(asOf(k))), 1)
         }
       }
       commitStats(Seq(dest), t)
-      expect(s"update/$k", readBack(dest, s"update/$k"),
-        Digest.exact(spark.read.parquet(in.source(k))))
+      expect(s"update/$k", readBack(dest, s"update/$k"))
     }
 
     // (4) micro-batches through the streaming upsert sink
     val schema = spark.read.parquet(in.batches).drop("batch").schema
-    val streamIn = s"$workDir/stream-in"
+    val streamIn = s"$dir/stream-in"
     Files.createDirectories(Paths.get(streamIn))
-    var expected = spark.read.parquet(in.source(Rounds))
     (1 to Batches).foreach { m =>
-      // the batch arrives: its file moves into the watched directory
+      // the batch arrives: its file is copied into the watched directory
       files(in.batch(m)).filter(_.getFileName.toString.endsWith(".parquet"))
-        .foreach(p => Files.move(p, Paths.get(streamIn, s"batch$m-${p.getFileName}")))
+        .foreach(f => Files.copy(f, Paths.get(streamIn, s"batch$m-${f.getFileName}")))
       group(s"delta/$m")
       val before = Snapshot.currentDeltaCount(spark, dest)
       val t = System.currentTimeMillis()
-      rec.op(s"delta/$m", "delta") {
+      op(s"delta/$m", "delta") {
         trace.span("upsertSink", "streaming.trigger") {
           graft.streaming.StreamingOps.upsertSink(
             spark.readStream.schema(schema).parquet(streamIn), dest, Pk, DeltaCol)
-            .option("checkpointLocation", s"$workDir/stream-ckpt/upsert")
+            .option("checkpointLocation", s"$dir/stream-ckpt/upsert")
             .start().awaitTermination()
         }
       }
       commitStats(Seq(dest), t)
       if (trace.enabled && before > 0 && Snapshot.currentDeltaCount(spark, dest) == 0)
         trace.add("etl.compactions", 1)
-      val got = readBack(dest, s"delta/$m")
-      expected = fold(expected, spark.read.parquet(s"$streamIn/batch$m-*"))
-        .localCheckpoint()
-      expect(s"delta/$m", got, Digest.exact(expected))
+      expect(s"delta/$m", readBack(dest, s"delta/$m"))
     }
     sc.clearJobGroup()
+  }
 
-    if (trace.enabled) {
-      // space: bytes under the snapshot root against one compacted copy
-      val compact = s"$workDir/compacted"
-      Snapshot.read(spark, dest).write.mode("overwrite").parquet(compact)
-      val compactBytes = bytesUnder(compact).toDouble
-      val compactRows = spark.read.parquet(compact).count().toDouble
-      trace.add("space_amp", bytesUnder(dest) / compactBytes)
-      val roots = dest +: targets.map(t => s"$ingestRoot/$t")
-      trace.add("etl.bytes_on_disk", roots.map(bytesUnder).sum.toDouble)
-      trace.add("etl.versions_retained", roots.map { r =>
-        Option(new File(r).list()).toSeq.flatten.count(_.matches("_v\\d+")).toDouble
-      }.sum)
-      // rows the user changed: the export, the seed, each round's updates,
-      // deletes and inserts, and every micro-batch row
-      val changedRows = in.changed.zipWithIndex.map { case (c, k) =>
-        spark.read.parquet(in.source(k)).filter(c).count()
-      }.sum
-      val batchRows = spark.read.parquet(s"$streamIn/*.parquet").count()
-      val userRows = in.csvRows + in.rows + changedRows + batchRows
-      trace.add("etl.user_bytes", userRows * compactBytes / compactRows)
-      trace.drain()
-      val (b, r, a, w) = trace.streamTotals
-      trace.add("streaming.batches", b)
-      trace.add("streaming.rows", r)
-      trace.add("streaming.add_batch_s", a)
-      trace.add("streaming.wal_s", w)
-    }
+  private val ingestTargets = (0 until CsvMembers).map(j => s"cb_part$j")
+
+  /** Space and write-amplification figures of a traced run, from the last
+    * pass's roots: bytes under the snapshot root against one compacted copy
+    * of the table, and the bytes the user changed in all `passes`. */
+  private def spaceStats(spark: SparkSession, trace: Trace, in: Inputs, dir: String,
+                         passes: Int): Unit = {
+    val dest = s"$dir/lineitem_snap"
+    val compact = s"$dir/compacted"
+    Snapshot.read(spark, dest).write.mode("overwrite").parquet(compact)
+    val compactBytes = bytesUnder(compact).toDouble
+    val compactRows = spark.read.parquet(compact).count().toDouble
+    trace.add("space_amp", bytesUnder(dest) / compactBytes)
+    val roots = dest +: ingestTargets.map(t => s"$dir/ingest/$t")
+    trace.add("etl.bytes_on_disk", roots.map(bytesUnder).sum.toDouble)
+    trace.add("etl.versions_retained", roots.map { r =>
+      Option(new File(r).list()).toSeq.flatten.count(_.matches("_v\\d+")).toDouble
+    }.sum)
+    // rows the user changed in one pass: the export, the seed, each round's
+    // updates, deletes and inserts, and every micro-batch row
+    val changedRows = in.changed.zipWithIndex.map { case (c, k) =>
+      spark.read.parquet(in.source(k)).filter(c).count()
+    }.sum
+    val batchRows = spark.read.parquet(in.batches).count()
+    val userRows = in.csvRows + in.rows + changedRows + batchRows
+    trace.add("etl.user_bytes", passes * userRows * compactBytes / compactRows)
+    trace.drain()
+    val (b, r, a, w) = trace.streamTotals
+    trace.add("streaming.batches", b)
+    trace.add("streaming.rows", r)
+    trace.add("streaming.add_batch_s", a)
+    trace.add("streaming.wal_s", w)
   }
 }

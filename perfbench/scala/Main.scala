@@ -58,20 +58,27 @@ object Main {
     val etlInputs = workload match {
       case "etl" | "train" =>
         Some(EtlWorkload.generate(spark, dataDir, s"$workDir/inputs", seed))
-      case "olap" | "kernels" => None
+      case "queries" => None
       case other => throw new IllegalArgumentException(s"unknown workload $other")
     }
     val inputsS = (System.nanoTime() - tIn) / 1e9
 
     // correctness pass of the read-only workloads, untimed; it also warms up
     val queryNames = workload match {
-      case "olap" | "kernels" => QueryWorkload.names(workload)
+      case "queries" => QueryWorkload.Queries
       case "train" => Seq(QueryWorkload.Olap.head, QueryWorkload.Kernels.last)
       case _ => Nil
     }
     val expected = readDigests(expectedPath)
     if (queryNames.nonEmpty)
       QueryWorkload.check(spark, rec, queryNames, dataDir, seed, expected)
+    // expected digest of every etl commit, untimed
+    val etlExpected = etlInputs.filter(_ => workload == "etl").map { in =>
+      val t0 = System.nanoTime()
+      val e = EtlWorkload.expectations(spark, in)
+      rec.checkSeconds += (System.nanoTime() - t0) / 1e9
+      e
+    }
     QueryWorkload.settle()
 
     val tTimed = System.nanoTime()
@@ -84,7 +91,10 @@ object Main {
     val sweeps = trace.span(workload, "workload") {
       (workload, etlInputs) match {
         case ("train", _) => Nil
-        case (_, Some(in)) => EtlWorkload.run(spark, rec, in, workDir); Nil
+        case (_, Some(in)) =>
+          EtlWorkload.run(spark, rec, in, etlExpected.get, workDir,
+            EtlWorkload.passes(seconds))
+          Nil
         case (_, None) =>
           QueryWorkload.run(spark, rec, queryNames, dataDir, seed, seconds, expected)
       }

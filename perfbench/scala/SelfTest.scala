@@ -84,21 +84,30 @@ object SelfTest {
         "failure not counted")
     }
 
-    test("etl check: the latest-wins fold keeps the newest version") {
+    test("etl check: the expected states keep the newest version of a key") {
       import spark.implicits._
-      val state = Seq((1L, 1.0, 10L), (2L, 2.0, 10L)).toDF("id", "v", "t")
+      val base = Seq((1L, 1.0, 10L), (2L, 2.0, 10L)).toDF("id", "v", "t")
         .withColumn(EtlWorkload.DeltaCol, timestamp_seconds(col("t"))).drop("t")
-      val batch = Seq((2L, 5.0, 30L), (2L, 4.0, 20L), (3L, 3.0, 20L)).toDF("id", "v", "t")
+      val batches = Seq((2L, 5.0, 30L, 1), (2L, 4.0, 20L, 1), (3L, 3.0, 20L, 1),
+        (1L, 7.0, 40L, 2)).toDF("id", "v", "t", "batch")
         .withColumn(EtlWorkload.DeltaCol, timestamp_seconds(col("t"))).drop("t")
-      val got = EtlWorkload.fold(state, batch).select("id", "v").as[(Long, Double)]
-        .collect().sorted.toSeq
-      assert(got == Seq((1L, 1.0), (2L, 5.0), (3L, 3.0)), s"fold gave $got")
+      val st = EtlWorkload.states(base, batches, 3)
+      def at(m: Int) = st.filter(col("batch") === m).select("id", "v")
+        .as[(Long, Double)].collect().sorted.toSeq
+      assert(at(1) == Seq((1L, 1.0), (2L, 5.0), (3L, 3.0)), s"state 1 is ${at(1)}")
+      assert(at(2) == Seq((1L, 7.0), (2L, 5.0), (3L, 3.0)), s"state 2 is ${at(2)}")
+      assert(at(3) == at(2), s"state 3 is ${at(3)}")
+      val by = Digest.exactBy(st.drop(EtlWorkload.DeltaCol), "batch")
+      (1 to 3).foreach { m =>
+        val one = Digest.exact(st.filter(col("batch") === m).drop("batch", EtlWorkload.DeltaCol))
+        assert(by(m.toLong) == one, s"exactBy gave ${by(m.toLong)} for state $m, exact $one")
+      }
     }
 
     test("digest check: a wrong expected digest fails, the right one passes") {
       val q = "q80_argmax_agg"
       val right = Digest.consume(graft.SparkEntry.queries(q)(spark, dataDir))
-      val rec = new Recorder("olap", new Trace(false))
+      val rec = new Recorder("queries", new Trace(false))
       QueryWorkload.check(spark, rec, Seq(q), dataDir, 0, Map(q -> right))
       assert(rec.failures.isEmpty, s"right digest rejected: ${rec.failures.mkString}")
       QueryWorkload.check(spark, rec, Seq(q), dataDir, 0, Map(q -> ("1" + right)))

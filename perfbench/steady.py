@@ -3,7 +3,7 @@ the median, quartiles, min and max of every metric. An end-to-end metric
 whose spread (interquartile distance over median) exceeds its bound in
 BENCHMARK.json is flagged; `setup_s` is reported but never flagged.
 
-    python3 perfbench/steady.py --workload olap [--runs 10] [--seed0 1]
+    python3 perfbench/steady.py --workload queries [--runs 10] [--seed0 1]
         [--trace 0|1]
 
 With `--trace 1` it also prints the tracing overhead: the median traced

@@ -93,6 +93,23 @@ class TraceTest(unittest.TestCase):
         self.assertEqual(m["jvm.gc_s"], 0.5)
         self.assertEqual(m["etl.write_bytes"], 0)
 
+    def test_by_op_keeps_operations_apart(self):
+        spans = [
+            span(1, 0, "workload", 0, 100),
+            {**span(2, 1, "op", 0, 40), "name": "w/qa"},
+            {**span(3, 1, "op", 50, 90), "name": "w/qb"},
+            {**span(4, 1, "op", 95, 99), "name": "w/qa"},
+            span(5, 2, "query.exec", 0, 40),
+            span(10, 5, "spark.job", 1, 39, tasks=3),
+            span(11, 3, "spark.job", 51, 89, tasks=5),
+            span(12, 4, "spark.job", 96, 98, tasks=1),
+        ]
+        m = layers.by_op(spans, 4)
+        self.assertEqual(sorted(m), ["w/qa", "w/qb"])
+        self.assertEqual((m["w/qa"]["spark.jobs"], m["w/qa"]["spark.tasks"]), (2, 4))
+        self.assertEqual((m["w/qb"]["spark.jobs"], m["w/qb"]["spark.tasks"]), (1, 5))
+        self.assertEqual(m["w/qa"]["query.exec_jobs"], 1)
+
     def test_every_per_layer_metric_is_produced(self):
         spec = json.loads((BENCH.parent / "BENCHMARK.json").read_text())
         rec = {"ops": [], "counters": {}, "failed": 0, "attempted": 1,
